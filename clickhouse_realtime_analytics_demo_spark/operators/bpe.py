@@ -1,10 +1,10 @@
-"""Distributed BPE tokenizer training (vocabulary induction).
+"""Distributed BPE tokenizer training (vocabulary induction) and encoding.
 
 Word-level byte-pair encoding a la Sennrich et al. 2016 ("Neural
 Machine Translation of Rare Words with Subword Units"): pre-tokenize
 the corpus into words, reduce to a (word, count) vocabulary once, then
 iteratively (1) count adjacent symbol pairs weighted by word count,
-(2) pick the most frequent pair, (3) merge it greedily left-to-right
+(2) pick the most frequent pair(s), (3) merge greedily left-to-right
 inside every word. Every pretraining pipeline fits a tokenizer on a
 corpus sample; this is that fit as Spark aggregations.
 
@@ -14,20 +14,20 @@ two short strings each); the corpus never leaves executors:
 - the corpus-sized pass happens ONCE (explode words -> groupBy word),
   collapsing 100 TB of text to a word vocabulary (tens of millions of
   rows at web scale — still a DataFrame, never collected);
-- each merge iteration is one partial-aggregated shuffle over the
+- each training round is one partial-aggregated shuffle over the
   vocabulary (explode adjacent pairs map-side, sum by pair) plus a
-  TakeOrdered top-1 (count desc, pair asc — deterministic across
-  cluster sizes), then a map-side array fold applying the merge;
-- the per-iteration rewrite is a JVM ``aggregate`` (fold) expression:
-  greedy left-to-right non-overlap falls out of the fold (a just-merged
-  tail element never string-equals the left symbol, so "aaaa" under
-  (a,a) becomes [aa, aa], not [aa, a, a]);
+  TakeOrdered ranked pool (count desc, pair asc — deterministic across
+  cluster sizes), then a map-side array fold per picked merge;
+- the rewrite is a JVM ``aggregate`` (fold) expression: greedy
+  left-to-right non-overlap falls out of the fold (a just-merged tail
+  element never string-equals the left symbol, so "aaaa" under (a,a)
+  becomes [aa, aa], not [aa, a, a]);
 - lineage is truncated with an explicit ``repartition`` +
-  ``localCheckpoint`` every ``checkpoint_every`` merges (the
-  vocabulary frame is small relative to the corpus; the checkpoint
-  bounds plan depth, and each top-1 job re-executes the folds stacked
-  since the last one — measured at a 259k-word vocab, every-3 beats
-  every-6 by 1.7x, hence the default).
+  ``localCheckpoint`` on one fixed policy (see :func:`train_bpe`).
+
+:func:`train_bpe` is the one trainer (``batch_size=1`` is the
+sequential algorithm, larger batches the 32k-merge scale path) and
+:func:`segment_words_rank` the one encoder (the rank-priority loop).
 
 Reference parity: ClickHouse has no tokenizer-training operator; the
 reference repo counts tokens only (see ``operators/text.py``
@@ -41,6 +41,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 
+from clickhouse_realtime_analytics_demo_spark.session import core_floor_partitions
+
 END_MARKER = "</w>"
 #: pre-tokenizer for TRAINING (oracle-shared): lowercase letter runs.
 #: Deliberately narrower than text.BPE_PATTERN — symbols stay ASCII
@@ -49,16 +51,26 @@ END_MARKER = "</w>"
 #: collation), and merged symbols can never collide with the marker.
 WORD_PATTERN = "[a-z]+"
 
+#: within a round, materialize the fold chain once this many folds are
+#: stacked: each picked merge chains one ``aggregate``-fold onto the
+#: rewrite expression, and at production batch sizes (128-256) an
+#: unbounded chain grows the Catalyst tree and generated code linearly
+#: with the batch. The barrier bounds analysis/codegen depth.
+FOLD_CHECKPOINT_EVERY = 32
+#: at a round end, materialize only when at least this many folds are
+#: stacked (carried across rounds otherwise): each pair-count job
+#: re-executes the folds stacked since the last barrier — measured at
+#: a 259k-word vocab, every-3 beats every-6 by 1.7x.
+ROUND_CHECKPOINT_MIN = 3
 
-def word_counts(
-    docs: DataFrame, text_col: str = "text", pattern: str = WORD_PATTERN
-) -> DataFrame:
+
+def word_counts(docs: DataFrame) -> DataFrame:
     """(word, cnt): the one corpus-sized pass. Partial aggregation
     combines map-side; the single shuffle key is the word itself."""
     return (
         docs.select(
             F.explode(
-                F.expr(f"regexp_extract_all(lower({text_col}), '{pattern}', 0)")
+                F.expr(f"regexp_extract_all(lower(text), '{WORD_PATTERN}', 0)")
             ).alias("word")
         )
         .groupBy("word")
@@ -89,10 +101,9 @@ def _merge_fold(syms: Column, left: str, right: str) -> Column:
 def train_bpe(
     docs: DataFrame,
     num_merges: int,
-    text_col: str = "text",
-    pattern: str = WORD_PATTERN,
-    end_marker: str = END_MARKER,
-    checkpoint_every: int = 3,
+    batch_size: int = 1,
+    exact_counts: bool = True,
+    stats: dict | None = None,
 ) -> list[tuple[int, str, str, str, int]]:
     """Learn ``num_merges`` BPE merges from a document corpus. Returns
     the merge table ``[(merge_rank, lhs, rhs, merged, pair_count)]`` —
@@ -102,128 +113,61 @@ def train_bpe(
     engine-independent order (Sennrich's reference breaks ties by dict
     order, which is insertion-dependent; ours is reproducible across
     partitionings, required by the determinism gate).
+
+    Each round counts pairs ONCE, then applies up to ``batch_size``
+    merges chosen greedily in rank order subject to PAIRWISE SYMBOL
+    DISJOINTNESS: a merge only changes the counts of pairs that share
+    one of its symbols, so every selected pair's count is still exact
+    at its application point, and the chained rewrite folds cannot
+    interact. Rounds needed: ~num_merges/batch_size, instead of one
+    driver round-trip per merge — a production tokenizer fits 30k-50k
+    merges.
+
+    ``batch_size=1`` is EXACTLY the sequential algorithm (pinned
+    against the pure-Python sequential reference in tests/test_bpe.py).
+    Larger batches deviate from strict sequential order in one bounded
+    way: a pair CREATED by this round's merges (e.g. ``(x, lr)``)
+    cannot be picked until the next round even if its count would rank
+    first — the standard trade of batched/distributed BPE trainers.
+    Pinned against a pure-Python twin of the same rule.
+
+    ``exact_counts=False``: over a small symbol alphabet only
+    ~O(|alphabet|) pairs can be pairwise-disjoint, so 1024 merges at
+    batch 128 ran 68 rounds (~15 picks/round), not 8. The relaxed mode
+    fills every batch with the top ``batch_size`` ranked pairs
+    regardless of symbol overlap and applies them sequentially in rank
+    order (fold semantics unchanged, still fully deterministic and
+    partition-count invariant). The trade: recorded ``pair_count``
+    values are as-of SELECTION time (a same-round earlier merge may
+    have changed them), and merge order deviates further from strict
+    sequential. Pinned against a pure-Python twin of the relaxed rule.
+
+    Barrier policy (repartition + localCheckpoint), fixed: the fold
+    chain is materialized every :data:`FOLD_CHECKPOINT_EVERY` stacked
+    folds; stacked folds carry across rounds and a round end
+    materializes only once :data:`ROUND_CHECKPOINT_MIN` are stacked;
+    nothing is materialized after the final merge, because nothing
+    reads that checkpoint.
+
+    ``stats``, when passed, is filled with ``rounds`` (pair-count
+    shuffles executed), ``picks_per_round`` and ``barriers`` (the merge
+    count after which each checkpoint ran). Instrumentation only, not
+    part of the result.
     """
     # Explicit spread at every checkpoint: AQE's byte-based coalescing
     # sees a few MB of (syms, cnt) rows and folds the vocabulary to 1-2
-    # partitions, but each iteration re-runs the pair explode and the
+    # partitions, but each round re-runs the pair explode and the
     # stacked merge folds PER ROW on that partitioning — measured at a
     # 259k-word vocab: 12 merges in 97 s on 2 AQE-coalesced tasks vs
     # 22 s spread over the session's shuffle parallelism (the r6/r8
     # expression-heavy-coalescing lesson, again).
-    n_parts = max(int(spark_conf_parts(docs)), 16)
+    n_parts = core_floor_partitions(docs.sparkSession)
     words = (
-        word_counts(docs, text_col, pattern)
+        word_counts(docs)
         .select(
             F.concat(
                 F.expr("regexp_extract_all(word, '.', 0)"),
-                F.array(F.lit(end_marker)),
-            ).alias("syms"),
-            "cnt",
-        )
-        .repartition(n_parts)
-        .localCheckpoint()
-    )
-    merges: list[tuple[int, str, str, str, int]] = []
-    for k in range(num_merges):
-        pairs = (
-            words.filter(F.size("syms") >= 2)
-            .select(
-                F.explode(
-                    F.expr(
-                        "transform(sequence(0, size(syms) - 2),"
-                        " i -> struct(syms[i] AS l, syms[i + 1] AS r))"
-                    )
-                ).alias("p"),
-                "cnt",
-            )
-            .groupBy("p.l", "p.r")
-            .agg(F.sum("cnt").alias("c"))
-        )
-        top = pairs.orderBy(F.desc("c"), "l", "r").limit(1).collect()
-        if not top:
-            break
-        left, right, count = top[0]["l"], top[0]["r"], int(top[0]["c"])
-        merges.append((k + 1, left, right, left + right, count))
-        words = words.withColumn("syms", _merge_fold(F.col("syms"), left, right))
-        if (k + 1) % checkpoint_every == 0:
-            words = words.repartition(n_parts).localCheckpoint()
-    return merges
-
-
-def spark_conf_parts(df: DataFrame) -> str:
-    return df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
-
-
-def train_bpe_batched(
-    docs: DataFrame,
-    num_merges: int,
-    batch_size: int = 16,
-    text_col: str = "text",
-    pattern: str = WORD_PATTERN,
-    end_marker: str = END_MARKER,
-    fold_checkpoint_every: int = 32,
-    stats: dict | None = None,
-    exact_counts: bool = True,
-) -> list[tuple[int, str, str, str, int]]:
-    """BPE training with BATCHED merge rounds — the 32k-merge scale
-    path. Sequential :func:`train_bpe` costs one Spark job per merge;
-    a production tokenizer fits 30k-50k merges, which is tens of
-    thousands of driver round-trips. Each round here counts pairs
-    ONCE, then applies up to ``batch_size`` merges chosen greedily in
-    rank order (count desc, pair asc) subject to PAIRWISE SYMBOL
-    DISJOINTNESS: a merge only changes the counts of pairs that share
-    one of its symbols (the consumed occurrences and their neighbor
-    pairs all contain ``l`` or ``r``), so every selected pair's count
-    is still exact at its application point, and the chained rewrite
-    folds cannot interact. Rounds needed: ~num_merges/batch_size.
-
-    ``batch_size=1`` is EXACTLY the sequential algorithm. Larger
-    batches deviate from strict sequential order in one bounded way:
-    a pair CREATED by this round's merges (e.g. ``(x, lr)``) cannot be
-    picked until the next round even if its count would rank first —
-    the standard trade of batched/distributed BPE trainers. Pinned
-    against a pure-Python reference of the same rule
-    (tests/test_bpe.py).
-
-    ``fold_checkpoint_every`` (r10): each picked merge chains one
-    ``aggregate``-fold onto the rewrite expression; at production batch
-    sizes (128-256) a single round's chain would grow the Catalyst
-    expression tree — and the generated code — linearly with the batch,
-    which is the binding cost the 1k-merge SCALEPROBE hunts. The chain
-    is therefore materialized (repartition + localCheckpoint, the same
-    barrier the round boundary uses) every N folds, bounding analysis/
-    codegen depth at N regardless of batch size. Semantics are
-    unchanged: the picked merges apply in rank order either way.
-
-    ``stats``, when passed, is filled with ``rounds`` (pair-count
-    shuffles executed), ``picks_per_round``, ``fold_checkpoints``, and
-    the r11 per-phase walls ``recount_s`` (pair explode + groupBy +
-    ranked-pool collect) / ``fold_s`` (merge-fold apply + checkpoint
-    barriers) — the numbers the recount-vs-incremental decision
-    (VERDICT r10 #4) is made from. Instrumentation only, not part of
-    the result.
-
-    ``exact_counts=False`` (r10): the SCALEPROBE found the disjointness
-    rule is the binding cost at production merge counts — over a small
-    symbol alphabet only ~O(|alphabet|) pairs can be pairwise-disjoint,
-    so 1024 merges at batch 128 ran 68 rounds (~15 picks/round), not 8.
-    The relaxed mode fills every batch with the top ``batch_size``
-    ranked pairs regardless of symbol overlap and applies them
-    sequentially in rank order (fold semantics unchanged, still fully
-    deterministic and partition-count invariant). The trade, stated
-    honestly: recorded ``pair_count`` values are as-of SELECTION time
-    (a same-round earlier merge may have changed them), and merge order
-    deviates further from strict sequential — the standard trade of
-    large-scale BPE trainers, where rounds ≈ num_merges/batch_size is
-    what makes 32k merges feasible. Pinned against a pure-Python twin
-    of the same relaxed rule (tests/test_bpe.py)."""
-    n_parts = max(int(spark_conf_parts(docs)), 16)
-    words = (
-        word_counts(docs, text_col, pattern)
-        .select(
-            F.concat(
-                F.expr("regexp_extract_all(word, '.', 0)"),
-                F.array(F.lit(end_marker)),
+                F.array(F.lit(END_MARKER)),
             ).alias("syms"),
             "cnt",
         )
@@ -232,20 +176,16 @@ def train_bpe_batched(
     )
     merges: list[tuple[int, str, str, str, int]] = []
     if stats is not None:
-        stats.update(
-            {
-                "rounds": 0,
-                "picks_per_round": [],
-                "fold_checkpoints": 0,
-                "recount_s": 0.0,
-                "fold_s": 0.0,
-            }
-        )
-    import time as _time
+        stats.update({"rounds": 0, "picks_per_round": [], "barriers": []})
 
+    def barrier(df: DataFrame) -> DataFrame:
+        if stats is not None:
+            stats["barriers"].append(len(merges))
+        return df.repartition(n_parts).localCheckpoint()
+
+    depth = 0  # folds stacked on `words` since the last barrier
     while len(merges) < num_merges:
         want = num_merges - len(merges)
-        _t0 = _time.perf_counter()
         pairs = (
             words.filter(F.size("syms") >= 2)
             .select(
@@ -265,8 +205,6 @@ def train_bpe_batched(
         cands = pairs.orderBy(F.desc("c"), "l", "r").limit(
             max(4 * batch_size, 64)
         ).collect()
-        if stats is not None:
-            stats["recount_s"] += _time.perf_counter() - _t0
         if not cands:
             break
         used: set[str] = set()
@@ -288,29 +226,21 @@ def train_bpe_batched(
         if not picked:  # pool exhausted by conflicts — retry smaller
             l, r, c = cands[0]["l"], cands[0]["r"], int(cands[0]["c"])
             picked = [(l, r, c)]
-        _t1 = _time.perf_counter()
         col = F.col("syms")
-        depth = 0
         for l, r, c in picked:
             merges.append((len(merges) + 1, l, r, l + r, c))
             col = _merge_fold(col, l, r)
             depth += 1
-            if depth >= max(1, fold_checkpoint_every):
-                words = (
-                    words.withColumn("syms", col)
-                    .repartition(n_parts)
-                    .localCheckpoint()
-                )
+            if depth >= FOLD_CHECKPOINT_EVERY and len(merges) < num_merges:
+                words = barrier(words.withColumn("syms", col))
                 col = F.col("syms")
                 depth = 0
-                if stats is not None:
-                    stats["fold_checkpoints"] += 1
-        if depth:
-            words = (
-                words.withColumn("syms", col).repartition(n_parts).localCheckpoint()
-            )
+        if depth:  # the round's last folds are still only in `col`
+            words = words.withColumn("syms", col)
+        if depth >= ROUND_CHECKPOINT_MIN and len(merges) < num_merges:
+            words = barrier(words)
+            depth = 0
         if stats is not None:
-            stats["fold_s"] += _time.perf_counter() - _t1
             stats["rounds"] += 1
             stats["picks_per_round"].append(len(picked))
     return merges
@@ -321,7 +251,8 @@ def train_bpe_df(
 ) -> DataFrame:
     """The merge table as a DataFrame (rank, lhs, rhs, merged,
     pair_count) — vocab-sized driver data parallelized back, the dict-
-    literal precedent (`plans/dictionaries.py`)."""
+    literal precedent (`plans/dictionaries.py`). ``kw`` goes to
+    :func:`train_bpe`."""
     merges = train_bpe(docs, num_merges, **kw)
     rows = [
         Row(merge_rank=m[0], lhs=m[1], rhs=m[2], merged=m[3], pair_count=m[4])
@@ -331,80 +262,37 @@ def train_bpe_df(
     return spark.createDataFrame(rows, schema) if rows else spark.createDataFrame([], schema)
 
 
-def segment_words(
-    words: DataFrame,
-    merges: list[tuple[int, str, str, str, int]],
-    word_col: str = "word",
-    end_marker: str = END_MARKER,
-) -> DataFrame:
-    """ENCODE with a learned merge table: apply every merge, in rank
-    order, to each word's symbol sequence (the standard BPE encoder
-    semantics — training-order replay). Adds a ``bpe`` array column.
-
-    Map-side only (num_merges chained folds, no shuffle); chains a
-    ``localCheckpoint`` every 16 merges to bound expression depth.
-
-    Scale honesty: fold-per-merge replay is right for the tens-of-
-    merges regime this repo trains (cost = merges × corpus, all
-    map-side). A production 32k-merge encoder does NOT replay folds —
-    it encodes each word independently with a rank-priority loop
-    (repeatedly merge the lowest-rank adjacent pair present), which
-    belongs in an Arrow ``mapInPandas`` batch with the merge table as
-    a plain dict: per-word work becomes O(len × log len) regardless of
-    vocabulary size, and the table (≤ a few MB) ships once per
-    executor. The fold form is kept because it is pure JVM and exactly
-    pins the training-replay semantics the tests verify.
-    """
-    out = words.withColumn(
-        "bpe",
-        F.concat(
-            F.expr(f"regexp_extract_all({word_col}, '.', 0)"),
-            F.array(F.lit(end_marker)),
-        ),
-    )
-    for i, (_, left, right, _, _) in enumerate(sorted(merges)):
-        out = out.withColumn("bpe", _merge_fold(F.col("bpe"), left, right))
-        if (i + 1) % 16 == 0:
-            out = out.localCheckpoint()
-    return out
-
-
 def segment_words_rank(
-    words: DataFrame,
-    merges: list[tuple[int, str, str, str, int]],
-    word_col: str = "word",
-    end_marker: str = END_MARKER,
+    words: DataFrame, merges: list[tuple[int, str, str, str, int]]
 ) -> DataFrame:
-    """ENCODE with a learned merge table via the PRODUCTION rank-
-    priority loop (the GPT-2 encoder shape): each word is encoded
+    """ENCODE the ``word`` column with a learned merge table via the
+    rank-priority loop (the GPT-2 encoder shape): each word is encoded
     independently by repeatedly merging its lowest-rank adjacent pair
     (all left-to-right non-overlapping occurrences per step) until no
-    table pair remains. Adds a ``bpe`` array column — the same output
-    contract as :func:`segment_words`.
+    table pair remains. Adds a ``bpe`` array column.
 
     For a WELL-FORMED merge table (one produced by training, where
     every merge's symbols are built from strictly earlier merges) this
-    is bit-identical to :func:`segment_words`'s training-order fold
-    replay — the classic equivalence the GPT-2 encoder relies on, and
-    ``tests/test_bpe.py`` pins it on trained tables at two scales. The
-    difference is the cost model: fold replay is O(num_merges ×
-    corpus) chained JVM projections (right for the tens-of-merges
-    demo, infeasible at 32k merges where the plan would be 32k
-    projections deep), while this runs O(len² · merges-present) pure
-    Python per word inside an Arrow ``mapInPandas`` batch — the ONE
-    place Python-in-the-row-path is the honest design: the inner loop
-    is data-dependent sequential rewriting no relational operator
-    expresses, the merge table (≤ a few MB at 32k merges) ships once
-    per task as a plain dict, and per-batch memoization collapses
-    repeated words (the words frame is usually a distinct vocabulary
-    anyway). No shuffle, no driver round-trips, embarrassingly
-    parallel over vocabulary partitions.
+    is bit-identical to replaying the merges in training order — the
+    classic equivalence the GPT-2 encoder relies on, pinned against
+    the pure-Python replay reference in ``tests/test_bpe.py`` on
+    trained tables at two scales. Replay would cost O(num_merges ×
+    corpus) chained JVM projections (infeasible at 32k merges, where
+    the plan would be 32k projections deep); this runs
+    O(len² · merges-present) pure Python per word inside an Arrow
+    ``mapInPandas`` batch — the ONE place Python-in-the-row-path is the
+    honest design: the inner loop is data-dependent sequential
+    rewriting no relational operator expresses, the merge table (≤ a
+    few MB at 32k merges) ships once per task as a plain dict, and
+    per-batch memoization collapses repeated words. No shuffle, no
+    driver round-trips, embarrassingly parallel over vocabulary
+    partitions.
 
     (For an ADVERSARIAL, non-trained table — e.g. rank 1 consuming a
-    symbol only rank 2 creates — the two encoders legitimately differ:
-    replay applies rank 1 while its operands don't exist yet; the
-    rank-priority loop merges whatever is present. Training can never
-    emit such a table.)
+    symbol only rank 2 creates — replay and this loop legitimately
+    differ: replay applies rank 1 while its operands don't exist yet;
+    the rank-priority loop merges whatever is present. Training can
+    never emit such a table.)
     """
     from pyspark.sql.types import ArrayType, StringType, StructField, StructType
 
@@ -420,7 +308,7 @@ def segment_words_rank(
             got = memo.get(w)
             if got is not None:
                 return got
-            syms = list(w) + [end_marker]
+            syms = list(w) + [END_MARKER]
             while len(syms) > 1:
                 best_rank = None
                 best_pair = None
@@ -447,7 +335,7 @@ def segment_words_rank(
 
         for pdf in batches:
             pdf = pdf.copy()
-            pdf["bpe"] = [enc(w) for w in pdf[word_col]]
+            pdf["bpe"] = [enc(w) for w in pdf["word"]]
             yield pdf
 
     return words.mapInPandas(encode, schema=out_schema)

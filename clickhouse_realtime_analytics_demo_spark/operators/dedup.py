@@ -22,6 +22,11 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from clickhouse_realtime_analytics_demo_spark.session import (
+    core_floor_partitions,
+    spread_partitions,
+)
+
 # ----------------------------------------------------------------- exact
 
 
@@ -457,8 +462,21 @@ def jaccard(shingles_a: Column, shingles_b: Column) -> Column:
     per-pair array work — the intersect is the only array traversal
     (measured on the corpus-prep pair stage: see
     ``ngram_jaccard_pairs``)."""
-    inter = F.size(F.array_intersect(shingles_a, shingles_b)).cast("double")
-    union = (F.size(shingles_a) + F.size(shingles_b)).cast("double") - inter
+    return jaccard_from_sizes(
+        F.size(F.array_intersect(shingles_a, shingles_b)),
+        F.size(shingles_a),
+        F.size(shingles_b),
+    )
+
+
+def jaccard_from_sizes(inter_n: Column, na: Column, nb: Column) -> Column:
+    """|A∩B| / (|A|+|B|−|A∩B|) from integer set sizes, one double
+    division; 0.0 when both sets are empty. The one Jaccard
+    arithmetic: :func:`jaccard` and the scale-regime attach of
+    :func:`minhash_char_dedup_pairs` (which carries only the sizes
+    across its barrier) both evaluate it."""
+    inter = inter_n.cast("double")
+    union = (na + nb).cast("double") - inter
     return F.when(union > 0, inter / union).otherwise(F.lit(0.0))
 
 
@@ -549,9 +567,14 @@ def minhash_char_dedup_pairs(
        AQE-sized join against the checkpointed pair ids — candidate-
        sized, never corpus-sized), explicitly ``repartition``-ed,
        then checkpointed once;
-    4. the ATTACHED pair rows (both shingle arrays riding on each
-       candidate pair, size-ratio prefiltered), repartitioned and
-       checkpointed BEFORE the Jaccard evaluates. This barrier is
+    4. the ATTACHED pair rows, size-ratio prefiltered, in one of two
+       regimes. At the core floor (1x corpora) the full rows — both
+       shingle arrays riding on each candidate pair — are
+       repartitioned and checkpointed BEFORE the Jaccard evaluates.
+       In the scale regime (``n_parts`` above the core floor) the
+       intersect size is evaluated inside the attach join's stage,
+       and only slim ``(ids, sizes, |A∩B|)`` rows cross the barrier
+       (see the comment at the regime switch). The barrier is
        load-bearing twice over: without it Catalyst folds the
        ``jaccard >= t`` filter into the attach join's CONDITION,
        where the ~1000×-a-normal-row array intersect is (a)
@@ -597,8 +620,6 @@ def minhash_char_dedup_pairs(
     # previously hand-set shuffle_partitions = 4x corpus factor to
     # keep blocks in the spill-free ~25 MB band; this derives the same
     # count from the source file sizes (the core floor carries 1x).
-    from clickhouse_realtime_analytics_demo_spark.session import spread_partitions
-
     n_parts = num_partitions or spread_partitions(
         docs, target_bytes=SHINGLE_SPREAD_SOURCE_BYTES
     )
@@ -658,7 +679,7 @@ def minhash_char_dedup_pairs(
     # bytes. At the core floor (1x corpora) the joins resolve to
     # broadcast with ZERO exchanges, so the spreads stay out of the
     # plan and the small-scale bench keeps its shape.
-    core_floor = max(int(spark.conf.get("spark.sql.shuffle.partitions", "32")), 16)
+    core_floor = core_floor_partitions(spark)
     size_ok = (F.col("na") >= F.col("nb") * thr - F.lit(1e-9)) & (
         F.col("nb") >= F.col("na") * thr - F.lit(1e-9)
     )
@@ -687,9 +708,9 @@ def minhash_char_dedup_pairs(
         #     squeeze), and a doc's pair fan-out is bounded by the
         #     bucket cap x bands, so id_b hash partitioning cannot
         #     concentrate more than ~cap x bands pairs per doc.
-        #     Arithmetic is EXACTLY :func:`jaccard`'s — int sizes,
-        #     one double division — pinned bit-identical across the
-        #     regime switch by tests/test_corpus_prep_lsh.py.
+        #     The score is :func:`jaccard_from_sizes`, the arithmetic
+        #     :func:`jaccard` evaluates — pinned bit-identical across
+        #     the regime switch by tests/test_corpus_prep_lsh.py.
         n_attach = attach_partitions(cands.count(), n_parts) if eager else n_parts
         pre = cands.repartition(n_attach, "id_a").join(a, "id_a").repartition(
             n_attach, "id_b"
@@ -708,9 +729,7 @@ def minhash_char_dedup_pairs(
             )
         )
         attached = _barrier(slim)
-        inter = F.col("inter_n").cast("double")
-        union = (F.col("na") + F.col("nb")).cast("double") - inter
-        jac = F.when(union > 0, inter / union).otherwise(F.lit(0.0))
+        jac = jaccard_from_sizes(F.col("inter_n"), F.col("na"), F.col("nb"))
         return attached.select("id_a", "id_b", jac.alias("jaccard")).filter(
             F.col("jaccard") >= thr
         )
@@ -946,8 +965,7 @@ def ngram_jaccard_pairs(
     # task (79 s) vs 32 tasks (4 s). An explicit numPartitions
     # repartition is user-specified, which AQE never coalesces, and a
     # broadcast of the build side preserves it through the join.
-    spark = docs.sparkSession
-    n_parts = max(int(spark.conf.get("spark.sql.shuffle.partitions", "32")), 16)
+    n_parts = core_floor_partitions(docs.sparkSession)
     a = sh.repartition(n_parts, "id").alias("a")
     # Explicit broadcast of the build side (ADVICE r6): with block_col
     # the join is equi on block, and past the auto-broadcast threshold

@@ -20,6 +20,8 @@ import random
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from clickhouse_realtime_analytics_demo_spark.session import core_floor_partitions
+
 
 def _to_double(vec: Column) -> Column:
     return F.transform(vec, lambda x: x.cast("double"))
@@ -328,8 +330,7 @@ def cosine_near_dup_pairs(
     # not AQE — decides verify parallelism, and AQE's byte-based
     # coalescing would squeeze any exchange back down. An explicit
     # numPartitions repartition is never coalesced.
-    spark = embeddings.sparkSession
-    n_parts = max(int(spark.conf.get("spark.sql.shuffle.partitions", "32")), 16)
+    n_parts = core_floor_partitions(embeddings.sparkSession)
     a = sigs.repartition(n_parts, "id").alias("a")
     # Broadcast the build side EXPLICITLY: the join is equi on `sig`,
     # so past the auto-broadcast threshold Spark would pick a

@@ -13,6 +13,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from clickhouse_realtime_analytics_demo_spark.session import core_floor_partitions
+
 # Tiny per-language stopword markers for the heuristic language ID.
 # Ordered dict → deterministic argmax tie-breaking (first wins).
 STOPWORDS: dict[str, tuple[str, ...]] = {
@@ -523,8 +525,7 @@ def bigram_novelty(
         "[^a-z0-9 ]",
         "_",
     )
-    spark = docs.sparkSession
-    n_parts = max(int(spark.conf.get("spark.sql.shuffle.partitions", "32")), 16)
+    n_parts = core_floor_partitions(docs.sparkSession)
     # Spread BEFORE the per-row-heavy sequence/substring build: small
     # parquet inputs arrive as one split, which would serialize the
     # explode (measured 3.07→0.67 s on the LSH shingle build, r8).

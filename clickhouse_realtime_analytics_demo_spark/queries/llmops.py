@@ -1139,21 +1139,23 @@ def doc_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     return bpe.train_bpe_df(spark, docs, _BPE_MERGES)
 
 
-@register("doc_bpe_segment")  # rows-only: the encoder replays the
+@register("doc_bpe_segment")  # rows-only: the encoder consumes the
 # learned merge table (driver-held, vocab-sized); full-stream SQL
 # replay would re-unroll training per word — the encode path is
 # instead pinned bit-for-bit against the pure-Python reference by
-# tests/test_bpe.py::test_segment_words_matches_reference
+# tests/test_bpe.py::test_segment_words_matches_reference* and this
+# query's stats by test_segment_query_matches_reference
 def doc_bpe_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """BPE ENCODE with the trained merges (operators/bpe.py
-    segment_words): tokenize the corpus vocabulary with the learned
-    merge table and report segmentation stats per token count —
-    (n_pieces, words, total_occurrences). Map-side folds only; the
-    merge table is the only driver-side state."""
+    """BPE ENCODE with the trained merges via the rank-priority loop
+    (operators/bpe.py::segment_words_rank, Arrow mapInPandas with the
+    merge table as a shipped dict): tokenize the corpus vocabulary
+    with the learned merge table and report segmentation stats per
+    token count — (n_pieces, words, total_occurrences). Map-side only;
+    the merge table is the only driver-side state."""
     docs = table(spark, sf_dir, "documents")
     merges = bpe.train_bpe(docs, _BPE_MERGES)
     words = bpe.word_counts(docs)
-    seg = bpe.segment_words(words, merges)
+    seg = bpe.segment_words_rank(words, merges)
     return (
         seg.select(F.size("bpe").alias("n_pieces"), "cnt")
         .groupBy("n_pieces")
@@ -1170,23 +1172,16 @@ def doc_bpe_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
 # round can't be picked until the next), so the sequential SQL replay
 # is not its oracle; pinned instead against an independent pure-Python
 # twin of the same batched rule at batch sizes 1/2/4/8 AND sf0.001
-# (tests/test_bpe.py::test_batched_*), with batch_size=1 proven
-# EXACTLY equal to the sequential oracle-backed algorithm.
+# (tests/test_bpe.py::test_batched_*); the same trainer at
+# batch_size=1 is the sequential oracle-backed doc_bpe_train.
 def doc_bpe_train_batched(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The 32k-merge scale path for BPE training: per round, ONE pair
     count feeds up to batch_size merges chosen greedily under pairwise
-    symbol disjointness (operators/bpe.py::train_bpe_batched) —
+    symbol disjointness (operators/bpe.py::train_bpe) —
     ~num_merges/batch_size driver round-trips instead of one per
     merge."""
     docs = table(spark, sf_dir, "documents")
-    merges = bpe.train_bpe_batched(docs, _BPE_MERGES * 2, batch_size=6)
-    rows = [
-        {"merge_rank": m[0], "lhs": m[1], "rhs": m[2], "merged": m[3],
-         "pair_count": m[4]}
-        for m in merges
-    ]
-    schema = "merge_rank int, lhs string, rhs string, merged string, pair_count bigint"
-    return spark.createDataFrame(rows, schema) if rows else spark.createDataFrame([], schema)
+    return bpe.train_bpe_df(spark, docs, _BPE_MERGES * 2, batch_size=6)
 
 
 @register("doc_bpe_train_relaxed")  # rows-only: the relaxed rule fills
@@ -1204,18 +1199,11 @@ def doc_bpe_train_relaxed(spark: SparkSession, sf_dir: str) -> DataFrame:
     at ~O(|alphabet|)/round (68 rounds for 1024 merges at batch 128),
     so the exact mode's round count grows with the alphabet, not the
     batch. Same fold semantics, same single pair-count shuffle per
-    round (operators/bpe.py::train_bpe_batched)."""
+    round (operators/bpe.py::train_bpe)."""
     docs = table(spark, sf_dir, "documents")
-    merges = bpe.train_bpe_batched(
-        docs, _BPE_MERGES * 2, batch_size=8, exact_counts=False
+    return bpe.train_bpe_df(
+        spark, docs, _BPE_MERGES * 2, batch_size=8, exact_counts=False
     )
-    rows = [
-        {"merge_rank": m[0], "lhs": m[1], "rhs": m[2], "merged": m[3],
-         "pair_count": m[4]}
-        for m in merges
-    ]
-    schema = "merge_rank int, lhs string, rhs string, merged string, pair_count bigint"
-    return spark.createDataFrame(rows, schema) if rows else spark.createDataFrame([], schema)
 
 
 @register(
@@ -1273,33 +1261,6 @@ def doc_tfidf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     WindowGroupLimit-pruned map-side."""
     docs = table(spark, sf_dir, "documents")
     return text.tfidf_topk(docs, k=3).orderBy("doc_id", "tok_rank")
-
-
-@register("doc_bpe_segment_rank")  # rows-only: same reasoning as
-# doc_bpe_segment (the encoder consumes the driver-held merge table;
-# a full-stream SQL replay would re-unroll training per word). Pinned
-# bit-for-bit against the fold-replay encoder on trained tables by
-# tests/test_bpe.py::test_rank_encoder_* — including this query's
-# output equalling doc_bpe_segment's exactly.
-def doc_bpe_segment_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """BPE ENCODE via the production rank-priority loop
-    (operators/bpe.py::segment_words_rank, Arrow mapInPandas with the
-    merge table as a shipped dict) — the 32k-merge-capable encode
-    path; the fold-replay twin doc_bpe_segment stays as the pure-JVM
-    training-order pin. Same segmentation-stats output shape."""
-    docs = table(spark, sf_dir, "documents")
-    merges = bpe.train_bpe(docs, _BPE_MERGES)
-    words = bpe.word_counts(docs)
-    seg = bpe.segment_words_rank(words, merges)
-    return (
-        seg.select(F.size("bpe").alias("n_pieces"), "cnt")
-        .groupBy("n_pieces")
-        .agg(
-            F.count("*").alias("words"),
-            F.sum("cnt").alias("total_occurrences"),
-        )
-        .orderBy("n_pieces")
-    )
 
 
 @register(

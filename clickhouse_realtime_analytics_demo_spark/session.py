@@ -238,6 +238,12 @@ def source_bytes(df: DataFrame) -> int | None:
     return out
 
 
+def core_floor_partitions(spark: SparkSession) -> int:
+    """The core floor for EXPLICIT repartitions: the session's shuffle
+    parallelism, never below 16 partitions."""
+    return max(int(spark.conf.get("spark.sql.shuffle.partitions", "32")), 16)
+
+
 def spread_partitions(
     df: DataFrame,
     floor: int | None = None,
@@ -254,9 +260,7 @@ def spread_partitions(
     the bytes instead of spilling. Falls back to the floor when the
     frame has no measurable file source."""
     if floor is None:
-        floor = max(
-            int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")), 16
-        )
+        floor = core_floor_partitions(df.sparkSession)
     size = source_bytes(df)
     if size is None:
         return floor

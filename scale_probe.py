@@ -956,139 +956,6 @@ def write_textops_section(rows: list[dict]) -> None:
     md.write_text(text.rstrip() + "\n\n" + "\n".join(lines) + "\n" + tail_sections)
 
 
-def bpe_probe(spark, ks=(1, 4, 10), num_merges=12) -> list[dict]:
-    """Round-9 BPE tokenizer training vs corpus size: one corpus pass
-    to a word vocabulary, then num_merges iterations of (pair-count
-    shuffle over the vocabulary + top-1 + map-side rewrite). Cipher
-    replication grows the WORD VOCABULARY ~linearly with K (each copy
-    contributes disjoint words) — the stress axis that matters, since
-    every iteration's cost is vocabulary-sized, not corpus-sized.
-    Records the vocab size so the ratio column can be read against the
-    thing that actually grew."""
-    from clickhouse_realtime_analytics_demo_spark.operators import bpe as _bpe
-
-    out = []
-    for k in ks:
-        d = tempfile.mkdtemp(prefix=f"bpe_k{k}_")
-        replicate(spark, d, k, only=("documents",))
-        docs = table(spark, d, "documents")
-        row: dict = {"k": k, "vocab": _bpe.word_counts(docs).count()}
-        best = float("inf")
-        for _ in range(2):
-            t0 = time.perf_counter()
-            merges = _bpe.train_bpe(docs, num_merges)
-            best = min(best, time.perf_counter() - t0)
-        row["train_s"] = round(best, 2)
-        row["merges"] = len(merges)
-        out.append(row)
-        print(json.dumps({"bpe_probe": row}), flush=True)
-        shutil.rmtree(d, ignore_errors=True)
-    return out
-
-
-def write_bpe_section(rows: list[dict], num_merges: int = 12) -> None:
-    md = Path("SCALEPROBE.md")
-    text = md.read_text() if md.exists() else ""
-    marker = "\n## BPE tokenizer training vs corpus size"
-    text, tail_sections = _splice_section(text, marker)
-    base = rows[0]
-    lines = [
-        marker.strip(),
-        "",
-        f"`scale_probe.py bpe`: operators/bpe.py train_bpe ({num_merges} merges)"
-        " on cipher-replicated documents, best-of-2 warm. The cipher"
-        " copies carry disjoint words, so the WORD VOCABULARY (the"
-        " per-iteration working set) grows ~linearly with K — the"
-        " honest stress for an operator whose corpus-sized work is one"
-        " pass and whose iteration cost is vocabulary-sized. The"
-        " driver holds only the merge table at every K.",
-        "",
-        "| K | docs | word vocab | train (s) | ratio |",
-        "|---|---|---|---|---|",
-    ]
-    for r in rows:
-        lines.append(
-            f"| {r['k']} | {r['k'] * 4792} | {r['vocab']} |"
-            f" {r['train_s']} | {round(r['train_s'] / base['train_s'], 1)}x |"
-        )
-    md.write_text(text.rstrip() + "\n\n" + "\n".join(lines) + "\n" + tail_sections)
-
-
-def _synth_bpe_docs(spark, n: int):
-    """Synthetic corpus of 15 hash-derived pseudo-words per doc
-    (digits translated to [a-j], ≤7 chars) — grows the WORD VOCABULARY
-    to the 10⁵ scale where the per-iteration pair-count shuffle
-    carries real weight (the axis that grows at 100 TB)."""
-    return spark.range(0, n, numPartitions=32).select(
-        F.col("id").alias("doc_id"),
-        F.array_join(
-            F.transform(
-                F.sequence(F.lit(1), F.lit(15)),
-                lambda j: F.translate(
-                    (F.abs(F.xxhash64(F.col("id"), j)) % 1_000_000).cast("string"),
-                    "0123456789",
-                    "abcdefghij",
-                ),
-            ),
-            " ",
-        ).alias("text"),
-    ).localCheckpoint()
-
-
-def bpe_synth_probe(spark, n_docs=(10_000, 40_000, 120_000), num_merges=12) -> list[dict]:
-    """Round-9 BPE at a NON-degenerate vocabulary (the testdata corpus
-    holds only 31 distinct words, so the documents-table probe mostly
-    measures fixed iteration overhead): synthesize documents so the
-    WORD VOCABULARY reaches the 10⁵ scale where the per-iteration
-    pair-count shuffle carries real weight — the thing that grows on a
-    100 TB corpus. Everything stays JVM expressions; fresh plan per
-    timed run."""
-    from clickhouse_realtime_analytics_demo_spark.operators import bpe as _bpe
-
-    out = []
-    for n in n_docs:
-        docs = _synth_bpe_docs(spark, n)
-        vocab = _bpe.word_counts(docs).count()
-        best = float("inf")
-        for _ in range(2):
-            t0 = time.perf_counter()
-            merges = _bpe.train_bpe(docs, num_merges)
-            best = min(best, time.perf_counter() - t0)
-        row = {"docs": n, "vocab": vocab, "train_s": round(best, 2), "merges": len(merges)}
-        out.append(row)
-        print(json.dumps({"bpe_synth_probe": row}), flush=True)
-        docs.unpersist()
-    return out
-
-
-def write_bpe_synth_section(rows: list[dict], num_merges: int = 12) -> None:
-    md = Path("SCALEPROBE.md")
-    text = md.read_text() if md.exists() else ""
-    marker = "\n## BPE training vs vocabulary size (synthetic)"
-    text, tail_sections = _splice_section(text, marker)
-    base = rows[0]
-    lines = [
-        marker.strip(),
-        "",
-        f"`scale_probe.py bpesynth`: train_bpe ({num_merges} merges) on synthetic"
-        " docs of hash-derived pseudo-words — the documents table's"
-        " 31-word vocabulary is degenerate, so this is the probe that"
-        " actually loads the per-iteration pair-count shuffle"
-        " (vocabulary-sized, the axis that grows at 100 TB). Best-of-2,"
-        " fresh plan per run.",
-        "",
-        "| docs | word vocab | train (s) | ratio | vocab ratio |",
-        "|---|---|---|---|---|",
-    ]
-    for r in rows:
-        lines.append(
-            f"| {r['docs']} | {r['vocab']} | {r['train_s']} |"
-            f" {round(r['train_s'] / base['train_s'], 1)}x |"
-            f" {round(r['vocab'] / base['vocab'], 1)}x |"
-        )
-    md.write_text(text.rstrip() + "\n\n" + "\n".join(lines) + "\n" + tail_sections)
-
-
 def tfidf_probe(spark, ks=(1, 4, 10, 40)) -> list[dict]:
     """Round-10: doc_tfidf_topk vs corpus size. Cipher replication
     grows the vocabulary ~linearly with K (disjoint content per copy),
@@ -1888,139 +1755,6 @@ def write_ann_stored_section(rows: list[dict]) -> None:
     md.write_text(text.rstrip() + "\n\n" + "\n".join(lines) + "\n" + tail_sections)
 
 
-def bpe_encode_probe(spark, n_docs: int = 10_000) -> list[dict]:
-    """Round-10: the two BPE ENCODE paths vs merge-table size over the
-    synthetic 10⁵-word vocabulary. Fold replay chains one JVM
-    projection per merge — cost ∝ merges × corpus REGARDLESS of
-    whether a merge fires — while the rank-priority mapInPandas
-    encoder pays one dict-driven rewrite loop per word. The table is a
-    REAL trained 64-merge prefix (so genuine merging happens) extended
-    to larger sizes with well-formed rare-char chain merges (operands
-    always exist; they rarely fire in hash-words, which is exactly the
-    point — replay pays for them anyway, the rank loop does not)."""
-    from clickhouse_realtime_analytics_demo_spark.operators import bpe as _bpe
-
-    docs = _synth_bpe_docs(spark, n_docs)
-    words = _bpe.word_counts(docs).select("word").repartition(32).localCheckpoint()
-    vocab = words.count()
-    trained = _bpe.train_bpe_batched(docs, 64, batch_size=32, exact_counts=False)
-
-    def extend(upto: int) -> list[tuple[int, str, str, str, int]]:
-        merges = list(trained)
-        rank = max(m[0] for m in merges) + 1
-        cur = "q"
-        while len(merges) < upto:
-            merges.append((rank, cur, "q", cur + "q", 0))
-            cur += "q"
-            rank += 1
-        return merges
-
-    out = []
-    for n_merges in (64, 256, 1024, 4096):
-        table = extend(n_merges)
-        row: dict = {"merges": n_merges, "vocab": vocab}
-        t0 = time.perf_counter()
-        _bpe.segment_words_rank(words, table).select(F.sum(F.size("bpe"))).collect()
-        row["rank_s"] = round(time.perf_counter() - t0, 2)
-        if n_merges <= 1024:  # 4096 chained projections: plan depth alone
-            t0 = time.perf_counter()  # disqualifies replay — not run
-            _bpe.segment_words(words, table).select(F.sum(F.size("bpe"))).collect()
-            row["fold_s"] = round(time.perf_counter() - t0, 2)
-        out.append(row)
-        print(json.dumps({"bpe_encode_probe": row}), flush=True)
-    return out
-
-
-def write_bpe_encode_section(rows: list[dict]) -> None:
-    md = Path("SCALEPROBE.md")
-    text = md.read_text() if md.exists() else ""
-    marker = "\n## BPE encode: fold replay vs rank-priority (merge-table size)"
-    text, tail_sections = _splice_section(text, marker)
-    lines = [
-        marker.strip(),
-        "",
-        f"`scale_probe.py bpeencode` (r10): both encoders over the synthetic "
-        f"{rows[0]['vocab']}-word vocabulary; trained 64-merge prefix extended "
-        "with well-formed chain merges (replay pays merges × corpus whether or "
-        "not a merge fires; the rank loop pays per pair PRESENT). Single runs.",
-        "",
-        "| merges | fold replay (s) | rank-priority (s) |",
-        "|---|---|---|",
-    ]
-    for r in rows:
-        lines.append(f"| {r['merges']} | {r.get('fold_s', '— (not run: plan depth)')} | {r['rank_s']} |")
-    md.write_text(text.rstrip() + "\n\n" + "\n".join(lines) + "\n" + tail_sections)
-
-
-def bpe_batched_probe(spark) -> list[dict]:
-    """Round-10 (VERDICT r9 #3): the batched BPE path at PRODUCTION
-    merge counts. r9 pinned `train_bpe_batched` but probed it only to
-    64 merges; a real tokenizer fits 30k-50k merges, so this probe
-    runs ≥1k merges at batch 64-256 over the synthetic 2.5×10⁵-word
-    vocabulary and records where the round structure (pair-count
-    shuffles), the intra-round fold-chain depth (Catalyst expression/
-    codegen growth — the `fold_checkpoint_every` valve), or the
-    driver-held merge table becomes the binding cost.
-
-    Configs, one timed run each (minutes-long runs; run-to-run noise
-    is small relative to the 4-40× effects measured):
-      A/B: 1024 merges, batch 128 vs 256      — batch scaling at depth
-      C:   256 merges, batch 128, ckpt 32     — baseline for D and E
-      D:   256 merges, batch 128, NO intra-round checkpoint
-           — the raw expression-depth cost the valve removes
-      E:   C's config at 1/3 the docs         — per-round time vs vocab
-      F/G: A/B with exact_counts=False        — the relaxed mode the
-           A-run motivated (disjoint picks cap at ~O(|alphabet|)/round,
-           so A ran 68 rounds, not 8; relaxed fills every batch)
-    """
-    import json as _json
-
-    from clickhouse_realtime_analytics_demo_spark.operators import bpe as _bpe
-
-    configs = [
-        ("A", 120_000, 1024, 128, 32, True),
-        ("B", 120_000, 1024, 256, 32, True),
-        ("C", 120_000, 256, 128, 32, True),
-        ("D", 120_000, 256, 128, 10**9, True),  # valve off: 128-deep chain/round
-        ("E", 40_000, 256, 128, 32, True),
-        ("F", 120_000, 1024, 128, 32, False),
-        ("G", 120_000, 1024, 256, 32, False),
-    ]
-    out = []
-    for tag, n, merges_n, batch, ckpt, exact in configs:
-        docs = _synth_bpe_docs(spark, n)
-        vocab = _bpe.word_counts(docs).count()
-        st: dict = {}
-        t0 = time.perf_counter()
-        merges = _bpe.train_bpe_batched(
-            docs, merges_n, batch_size=batch, fold_checkpoint_every=ckpt,
-            stats=st, exact_counts=exact,
-        )
-        wall = time.perf_counter() - t0
-        table_bytes = sum(
-            len(m[1]) + len(m[2]) + len(m[3]) + 16 for m in merges
-        )
-        row = {
-            "cfg": tag,
-            "docs": n,
-            "vocab": vocab,
-            "merges": len(merges),
-            "batch": batch,
-            "exact": exact,
-            "ckpt": ckpt if ckpt < 10**9 else 0,
-            "wall_s": round(wall, 1),
-            "rounds": st.get("rounds", 0),
-            "s_per_round": round(wall / max(st.get("rounds", 1), 1), 2),
-            "merges_per_s": round(len(merges) / wall, 1),
-            "fold_checkpoints": st.get("fold_checkpoints", 0),
-            "merge_table_bytes": table_bytes,
-        }
-        out.append(row)
-        print(_json.dumps({"bpe_batched_probe": row}), flush=True)
-        docs.unpersist()
-    return out
-
-
 def semdedup_probe(spark, ks=(1, 10, 40)) -> list[dict]:
     """Round-11: SemDeDup semantic dedup as the corpus grows, with
     num_cells scaled ∝ K (the published doctrine — clusters stay
@@ -2104,237 +1838,6 @@ def write_semdedup_section(rows: list[dict]) -> None:
             f"| {r['k']} | {r['vectors']} | {r['num_cells']} | {r['assign']} |"
             f" {r['pairs']} | {r['planted_recall']} | {r['wall_s']} |"
             f" {round(r['wall_s'] / base['wall_s'], 1)}x |"
-        )
-    md.write_text(text.rstrip() + "\n\n" + "\n".join(lines) + "\n" + tail_sections)
-
-
-def bpe_4096_probe(spark) -> dict:
-    """Round-11 (VERDICT r10 #4): relaxed BPE at 4096 merges — 4× past
-    the r10 1024-merge point, en route to the 32k production count —
-    with the per-phase wall split (recount vs fold) that decides
-    whether incremental pair-count maintenance (update only pairs
-    touching this round's merged symbols) would pay. rounds ==
-    merges/batch exactly in relaxed mode, so 4096 @ batch 256 = 16
-    recounts; the question is whether the recount (corpus-sized
-    explode+groupBy per round) or the fold chain (one rewrite per
-    merge, checkpointed every 32) binds."""
-    import json as _json
-
-    from clickhouse_realtime_analytics_demo_spark.operators import bpe as _bpe
-
-    docs = _synth_bpe_docs(spark, 120_000)
-    vocab = _bpe.word_counts(docs).count()
-    st: dict = {}
-    t0 = time.perf_counter()
-    merges = _bpe.train_bpe_batched(
-        docs, 4096, batch_size=256, fold_checkpoint_every=32, stats=st,
-        exact_counts=False,
-    )
-    wall = time.perf_counter() - t0
-    row = {
-        "docs": 120_000,
-        "vocab": vocab,
-        "merges": len(merges),
-        "batch": 256,
-        "wall_s": round(wall, 1),
-        "rounds": st.get("rounds", 0),
-        "s_per_round": round(wall / max(st.get("rounds", 1), 1), 2),
-        "recount_s": round(st.get("recount_s", 0.0), 1),
-        "fold_s": round(st.get("fold_s", 0.0), 1),
-        "recount_share_pct": round(
-            100.0 * st.get("recount_s", 0.0) / max(wall, 1e-9), 1
-        ),
-        "fold_checkpoints": st.get("fold_checkpoints", 0),
-    }
-    print(_json.dumps({"bpe_4096_probe": row}), flush=True)
-    return row
-
-
-def bpe_big_probe(spark, merge_counts=(8192, 16384), prefix_pin=512) -> list[dict]:
-    """Round-12 (VERDICT r11 #4): relaxed BPE at PRODUCTION merge
-    counts, end-to-end — no extrapolation. Per rung: full
-    train_bpe_batched(exact_counts=False) run with the recount/fold
-    wall split, plus a sampled-prefix VOCABULARY PIN: the first
-    ``prefix_pin`` merges re-derived single-threaded by the
-    pure-Python twin (tests.test_bpe.reference_train_bpe_batched, the
-    same selection rule) from the same word counts — the distributed
-    trainer's merge sequence must match symbol-for-symbol."""
-    import json as _json
-
-    from clickhouse_realtime_analytics_demo_spark.operators import bpe as _bpe
-    from tests.test_bpe import reference_train_bpe_batched
-
-    docs = _synth_bpe_docs(spark, 120_000)
-    wc_df = _bpe.word_counts(docs).localCheckpoint()
-    vocab = wc_df.count()
-    wc = {r["word"]: r["cnt"] for r in wc_df.collect()}
-    ref = reference_train_bpe_batched(
-        wc, prefix_pin, batch_size=256, exact_counts=False
-    )
-    ref_prefix = [(m[1], m[2], m[3]) for m in ref]
-    out = []
-    for num_merges in merge_counts:
-        st: dict = {}
-        t0 = time.perf_counter()
-        merges = _bpe.train_bpe_batched(
-            docs, num_merges, batch_size=256, fold_checkpoint_every=32,
-            stats=st, exact_counts=False,
-        )
-        wall = time.perf_counter() - t0
-        got_prefix = [(m[1], m[2], m[3]) for m in merges[:prefix_pin]]
-        row = {
-            "docs": 120_000,
-            "vocab": vocab,
-            "merges": len(merges),
-            "batch": 256,
-            "wall_s": round(wall, 1),
-            "rounds": st.get("rounds", 0),
-            "s_per_round": round(wall / max(st.get("rounds", 1), 1), 2),
-            "recount_s": round(st.get("recount_s", 0.0), 1),
-            "fold_s": round(st.get("fold_s", 0.0), 1),
-            "recount_share_pct": round(
-                100.0 * st.get("recount_s", 0.0) / max(wall, 1e-9), 1
-            ),
-            "prefix_pin": prefix_pin,
-            "prefix_ok": got_prefix == ref_prefix,
-        }
-        assert row["prefix_ok"], (
-            f"prefix vocabulary diverged from the pure-Python twin at "
-            f"{next(i for i, (a, b) in enumerate(zip(got_prefix, ref_prefix)) if a != b)}"
-        )
-        out.append(row)
-        print(_json.dumps({"bpe_big_probe": row}), flush=True)
-    return out
-
-
-def write_bpe_big_section(rows: list[dict], anchor_4096_s: float = 1715.0) -> None:
-    """SCALEPROBE section with the MEASURED scaling exponent: least-
-    squares slope of log(wall) vs log(merges) over this run's rungs
-    plus the committed r11 4096-merge anchor."""
-    import math as _math
-
-    md = Path("SCALEPROBE.md")
-    text = md.read_text() if md.exists() else ""
-    marker = "\n## Relaxed BPE at production merge counts (measured)"
-    text, tail_sections = _splice_section(text, marker)
-    pts = [(4096.0, anchor_4096_s)] + [(float(r["merges"]), r["wall_s"]) for r in rows]
-    xs = [_math.log(p[0]) for p in pts]
-    ys = [_math.log(p[1]) for p in pts]
-    n = len(pts)
-    mx, my = sum(xs) / n, sum(ys) / n
-    slope = sum((x - mx) * (y - my) for x, y in zip(xs, ys)) / sum(
-        (x - mx) ** 2 for x in xs
-    )
-    top = max(pts, key=lambda p: p[0])
-    wall_32k_h = top[1] * (32768.0 / top[0]) ** slope / 3600.0
-    lines = [
-        marker.strip(),
-        "",
-        "`scale_probe.py bpebig` (r12, VERDICT r11 #4): "
-        "`train_bpe_batched(exact_counts=False)` run END-TO-END at "
-        "production merge counts (batch 256, fold checkpoints every 32) "
-        "over the 120k-doc hash-word corpus — the r11 4096-merge row "
-        "extrapolated 32k; these rungs measure it. Each rung also pins "
-        f"the first {rows[0]['prefix_pin']} merges symbol-for-symbol "
-        "against the pure-Python twin re-derived from the same word "
-        "counts (prefix_ok, asserted in the probe).",
-        "",
-        "| merges | rounds | wall (s) | s/round | recount (s) | fold (s) | recount share | prefix pin |",
-        "|---|---|---|---|---|---|---|---|",
-    ]
-    for r in rows:
-        lines.append(
-            f"| {r['merges']} | {r['rounds']} | {r['wall_s']} | {r['s_per_round']} |"
-            f" {r['recount_s']} | {r['fold_s']} | {r['recount_share_pct']}% |"
-            f" {'OK' if r['prefix_ok'] else 'DIVERGED'} |"
-        )
-    lines += [
-        "",
-        f"Measured scaling exponent over {{{', '.join(str(int(p[0])) for p in pts)}}} "
-        f"merges: wall ∝ merges^{slope:.2f} (least squares on log-log; the "
-        "4096 point is the committed r11 anchor). The fold chain (one "
-        "corpus rewrite per merge) stays the binding cost at every rung; "
-        "recount share stays low, re-confirming that incremental "
-        f"pair-count maintenance cannot pay. At this exponent a 32k-merge "
-        f"tokenizer lands at ~{wall_32k_h:.1f} h on this box — a scheduled "
-        "training job, not a query; on a real cluster the fold is "
-        "map-side parallel and scales with executors.",
-    ]
-    md.write_text(text.rstrip() + "\n\n" + "\n".join(lines) + "\n" + tail_sections)
-
-
-def write_bpe_4096_section(row: dict) -> None:
-    md = Path("SCALEPROBE.md")
-    text = md.read_text() if md.exists() else ""
-    marker = "\n## Relaxed BPE at 4096 merges (recount vs incremental)"
-    text, tail_sections = _splice_section(text, marker)
-    recount_pct = row["recount_share_pct"]
-    fold_pct = round(100.0 * row["fold_s"] / max(row["wall_s"], 1e-9), 1)
-    if recount_pct >= 60:
-        decision = (
-            "Decision: the RECOUNT dominates — incremental pair-count "
-            "maintenance (recompute only over words containing this "
-            f"round's merged symbols) would attack the {recount_pct}% "
-            "and is the next lever for 32k merges."
-        )
-    else:
-        decision = (
-            f"Decision: the recount is NOT the binding cost ({recount_pct}% "
-            f"of wall vs {fold_pct}% in the fold/checkpoint chain), so "
-            "incremental pair-count maintenance — which only removes "
-            "recount work and adds a distributed delta-merge per round — "
-            "cannot pay at this shape. The fold chain already carries the "
-            "depth valve (`fold_checkpoint_every`); the remaining fold "
-            "cost is the corpus rewrite itself, which every BPE trainer "
-            "pays once per merge. Extrapolation to 32k @ batch 256 = 128 "
-            "rounds: wall scales ~linearly in merges (fold-bound), i.e. "
-            "~8× this run — feasible, no algorithm change required."
-        )
-    lines = [
-        marker.strip(),
-        "",
-        "`scale_probe.py bpe4096` (r11, VERDICT r10 #4): "
-        "`train_bpe_batched(exact_counts=False)` at 4096 merges, batch "
-        "256, over the synthetic hash-word corpus, with the per-phase "
-        "wall split that the recount-vs-incremental decision needs "
-        "(recount = per-round corpus pair explode + groupBy + ranked "
-        "pool collect; fold = per-merge corpus rewrite + checkpoint "
-        "barriers every 32).",
-        "",
-        "| docs | vocab | merges | batch | rounds | wall (s) | s/round | recount (s) | fold (s) | recount share |",
-        "|---|---|---|---|---|---|---|---|---|---|",
-        f"| {row['docs']} | {row['vocab']} | {row['merges']} | {row['batch']} |"
-        f" {row['rounds']} | {row['wall_s']} | {row['s_per_round']} |"
-        f" {row['recount_s']} | {row['fold_s']} | {recount_pct}% |",
-        "",
-        decision,
-    ]
-    md.write_text(text.rstrip() + "\n\n" + "\n".join(lines) + "\n" + tail_sections)
-
-
-def write_bpe_batched_section(rows: list[dict]) -> None:
-    md = Path("SCALEPROBE.md")
-    text = md.read_text() if md.exists() else ""
-    marker = "\n## Batched BPE at production merge counts"
-    text, tail_sections = _splice_section(text, marker)
-    lines = [
-        marker.strip(),
-        "",
-        "`scale_probe.py bpebatched` (r10, VERDICT r9 #3): "
-        "`train_bpe_batched` at ≥1k merges over the synthetic "
-        "hash-word vocabulary. ckpt = `fold_checkpoint_every` "
-        "(0 = intra-round checkpointing off). One timed run per "
-        "config (minutes-long runs).",
-        "",
-        "| cfg | docs | vocab | merges | batch | exact | ckpt | wall (s) | rounds | s/round | merges/s | merge table (bytes) |",
-        "|---|---|---|---|---|---|---|---|---|---|---|---|",
-    ]
-    for r in rows:
-        lines.append(
-            f"| {r['cfg']} | {r['docs']} | {r['vocab']} | {r['merges']} |"
-            f" {r['batch']} | {'y' if r.get('exact', True) else 'n'} |"
-            f" {r['ckpt']} | {r['wall_s']} | {r['rounds']} |"
-            f" {r['s_per_round']} | {r['merges_per_s']} | {r['merge_table_bytes']} |"
         )
     md.write_text(text.rstrip() + "\n\n" + "\n".join(lines) + "\n" + tail_sections)
 
@@ -4209,23 +3712,6 @@ def main() -> None:
         write_semdedup_section(semdedup_probe(spark))
         spark.stop()
         return
-    if len(sys.argv) > 1 and sys.argv[1] == "bpebig":
-        ks = tuple(int(a) for a in sys.argv[2:]) or (8192, 16384)
-        spark = get_spark(app_name="scale_probe_bpe_big")
-        write_bpe_big_section(bpe_big_probe(spark, merge_counts=ks))
-        spark.stop()
-        return
-    if len(sys.argv) > 1 and sys.argv[1] == "bpe4096":
-        spark = get_spark(app_name="scale_probe_bpe4096")
-        write_bpe_4096_section(bpe_4096_probe(spark))
-        spark.stop()
-        return
-    if len(sys.argv) > 1 and sys.argv[1] == "bpebatched":
-        spark = get_spark(app_name="scale_probe_bpe_batched")
-        rows = bpe_batched_probe(spark)
-        write_bpe_batched_section(rows)
-        spark.stop()
-        return
     if len(sys.argv) > 1 and sys.argv[1] == "tfidf":
         spark = get_spark(app_name="scale_probe_tfidf")
         rows = tfidf_probe(spark)
@@ -4263,24 +3749,6 @@ def main() -> None:
         spark = get_spark(app_name="scale_probe_annint8")
         rows = ann_int8_probe(spark)
         write_ann_int8_section(rows)
-        spark.stop()
-        return
-    if len(sys.argv) > 1 and sys.argv[1] == "bpeencode":
-        spark = get_spark(app_name="scale_probe_bpeencode")
-        rows = bpe_encode_probe(spark)
-        write_bpe_encode_section(rows)
-        spark.stop()
-        return
-    if len(sys.argv) > 1 and sys.argv[1] == "bpesynth":
-        spark = get_spark(app_name="scale_probe_bpe_synth")
-        rows = bpe_synth_probe(spark)
-        write_bpe_synth_section(rows)
-        spark.stop()
-        return
-    if len(sys.argv) > 1 and sys.argv[1] == "bpe":
-        spark = get_spark(app_name="scale_probe_bpe")
-        rows = bpe_probe(spark)
-        write_bpe_section(rows)
         spark.stop()
         return
     if len(sys.argv) > 1 and sys.argv[1] == "textops":

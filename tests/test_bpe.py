@@ -1,18 +1,21 @@
 """BPE tokenizer training pinned against a from-scratch pure-Python
 reference (Sennrich et al. 2016 learn_bpe semantics, our deterministic
 (count desc, pair asc) tie-break) — the union-find-vs-star-contraction
-pinning pattern from test_graph.py — plus encoder roundtrip and the
-greedy-overlap corner."""
+pinning pattern from test_graph.py — plus the encoder against the
+pure-Python training-order replay, the greedy-overlap corner and the
+trainer's barrier policy."""
 
 from __future__ import annotations
 
 import re
 
+from clickhouse_realtime_analytics_demo_spark.operators import bpe
 from clickhouse_realtime_analytics_demo_spark.operators.bpe import (
     END_MARKER,
     WORD_PATTERN,
-    segment_words,
+    segment_words_rank,
     train_bpe,
+    word_counts,
 )
 
 # ------------------------------------------------ pure-Python reference
@@ -99,7 +102,7 @@ def test_sf0001_documents_match_reference(spark):
         .column("text").to_pylist() if t is not None
     ]
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    got = train_bpe(docs, 24, checkpoint_every=5)
+    got = train_bpe(docs, 24)
     want = reference_train_bpe(reference_word_counts(texts), 24)
     assert got == want
 
@@ -138,9 +141,37 @@ def test_segment_words_matches_reference(spark):
     merges = train_bpe(docs, 12)
     vocab = ["lowest", "newest", "widest", "low", "new", "unseen"]
     words = spark.createDataFrame([(w,) for w in vocab], "word string")
-    got = {r["word"]: r["bpe"] for r in segment_words(words, merges).collect()}
+    got = {r["word"]: r["bpe"] for r in segment_words_rank(words, merges).collect()}
     for w in vocab:
         assert got[w] == reference_segment(w, merges), w
+
+
+def test_rank_encoder_matches_fold_replay_fixture(spark):
+    # the rank-priority encoder against the training-order fold replay
+    # (reference_segment) on the fixture table, including the
+    # overlapping-run words aaaa/aa
+    docs = spark.createDataFrame(
+        [(i, t) for i, t in enumerate(FIXTURE)], "doc_id bigint, text string"
+    )
+    merges = train_bpe(docs, 12)
+    vocab = ["lowest", "newest", "widest", "low", "new", "unseen", "aaaa", "aa"]
+    words = spark.createDataFrame([(w,) for w in vocab], "word string")
+    rank = {r["word"]: r["bpe"] for r in segment_words_rank(words, merges).collect()}
+    fold = {w: reference_segment(w, merges) for w in vocab}
+    assert rank == fold
+
+
+def test_segment_words_matches_reference_corpus(spark):
+    # trained table over the sf0.001 corpus, encoded over its own word
+    # vocabulary: the rank-priority encoder must equal the training-
+    # order replay bit-for-bit on every word
+    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    merges = train_bpe(docs, 24)
+    words = word_counts(docs).select("word")
+    got = {r["word"]: r["bpe"] for r in segment_words_rank(words, merges).collect()}
+    assert len(got) > 0
+    for w, pieces in got.items():
+        assert pieces == reference_segment(w, merges), w
 
 
 def test_iteration_plan_shape(spark):
@@ -151,10 +182,7 @@ def test_iteration_plan_shape(spark):
     # rewrite is a pure map-side Project (no exchange at all).
     from pyspark.sql import functions as F
 
-    from clickhouse_realtime_analytics_demo_spark.operators.bpe import (
-        _merge_fold,
-        word_counts,
-    )
+    from clickhouse_realtime_analytics_demo_spark.operators.bpe import _merge_fold
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     words = word_counts(docs).select(
@@ -193,7 +221,7 @@ def test_iteration_plan_shape(spark):
 def reference_train_bpe_batched(
     wc, num_merges, batch_size, end_marker=END_MARKER, exact_counts=True
 ):
-    """Independent single-threaded twin of train_bpe_batched's rule:
+    """Independent single-threaded twin of train_bpe's batched rule:
     per round, greedy rank-order selection under pairwise symbol
     disjointness (or the whole ranked batch when exact_counts=False),
     then apply all selected merges sequentially in rank order."""
@@ -242,28 +270,13 @@ def reference_train_bpe_batched(
     return merges
 
 
-def test_batched_batch1_is_sequential(spark):
-    from clickhouse_realtime_analytics_demo_spark.operators.bpe import (
-        train_bpe_batched,
-    )
-
-    docs = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(FIXTURE)], "doc_id bigint, text string"
-    )
-    assert train_bpe_batched(docs, 16, batch_size=1) == train_bpe(docs, 16)
-
-
 def test_batched_matches_reference(spark):
-    from clickhouse_realtime_analytics_demo_spark.operators.bpe import (
-        train_bpe_batched,
-    )
-
     docs = spark.createDataFrame(
         [(i, t) for i, t in enumerate(FIXTURE)], "doc_id bigint, text string"
     )
     wc = reference_word_counts(FIXTURE)
     for bs in (2, 4, 8):
-        got = train_bpe_batched(docs, 16, batch_size=bs)
+        got = train_bpe(docs, 16, batch_size=bs)
         want = reference_train_bpe_batched(wc, 16, bs)
         assert got == want, bs
 
@@ -271,40 +284,61 @@ def test_batched_matches_reference(spark):
 def test_batched_matches_reference_sf0001(spark):
     import pyarrow.parquet as pq
 
-    from clickhouse_realtime_analytics_demo_spark.operators.bpe import (
-        train_bpe_batched,
-    )
-
     texts = [
         t for t in pq.read_table("/root/testdata/sf0.001/documents.parquet")
         .column("text").to_pylist() if t is not None
     ]
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    got = train_bpe_batched(docs, 24, batch_size=6)
+    got = train_bpe(docs, 24, batch_size=6)
     want = reference_train_bpe_batched(reference_word_counts(texts), 24, 6)
     assert got == want
 
 
-def test_batched_fold_checkpoint_invariant(spark):
-    """r10: fold_checkpoint_every only bounds expression depth — it
-    must not change results (merges apply in rank order either way).
-    Also pins the stats instrumentation the 1k-merge probe reads."""
-    from clickhouse_realtime_analytics_demo_spark.operators.bpe import (
-        train_bpe_batched,
-    )
+def _round_ends(st: dict) -> set[int]:
+    ends, n = set(), 0
+    for picks in st["picks_per_round"]:
+        n += picks
+        ends.add(n)
+    return ends
 
+
+def test_batched_fold_checkpoint_invariant(spark, monkeypatch):
+    """r10: the in-round fold checkpoint only bounds expression depth —
+    it must not change results (merges apply in rank order either
+    way). Also pins the stats instrumentation."""
     docs = spark.createDataFrame(
         [(i, t) for i, t in enumerate(FIXTURE)], "doc_id bigint, text string"
     )
     st_deep: dict = {}
     st_ckpt: dict = {}
-    deep = train_bpe_batched(docs, 16, batch_size=8, fold_checkpoint_every=10**9, stats=st_deep)
-    ckpt = train_bpe_batched(docs, 16, batch_size=8, fold_checkpoint_every=2, stats=st_ckpt)
+    monkeypatch.setattr(bpe, "FOLD_CHECKPOINT_EVERY", 10**9)
+    deep = train_bpe(docs, 16, batch_size=8, stats=st_deep)
+    monkeypatch.setattr(bpe, "FOLD_CHECKPOINT_EVERY", 2)
+    ckpt = train_bpe(docs, 16, batch_size=8, stats=st_ckpt)
     assert deep == ckpt
-    assert st_deep["fold_checkpoints"] == 0
-    assert st_ckpt["fold_checkpoints"] >= 4  # 16 merges / every-2, minus round tails
+    # without the in-round valve every barrier sits at a round end
+    assert set(st_deep["barriers"]) <= _round_ends(st_deep)
+    assert len(set(st_ckpt["barriers"]) - _round_ends(st_ckpt)) >= 2
     assert st_deep["rounds"] == st_ckpt["rounds"] == len(st_deep["picks_per_round"])
     assert sum(st_deep["picks_per_round"]) == 16
+
+
+def test_barrier_policy(spark):
+    """One fixed barrier policy: stacked folds carry across rounds, a
+    round end materializes only once 3 are stacked, and nothing is
+    materialized after the final merge (no reader)."""
+    docs = spark.createDataFrame(
+        [(i, t) for i, t in enumerate(FIXTURE)], "doc_id bigint, text string"
+    )
+    st: dict = {}
+    assert len(train_bpe(docs, 12, stats=st)) == 12
+    assert st["barriers"] == [3, 6, 9]
+    sf_docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    st = {}
+    merges = train_bpe(sf_docs, 24, batch_size=6, stats=st)
+    assert len(merges) == 24 and st["rounds"] >= 2
+    assert st["barriers"] and len(merges) not in st["barriers"]
+    assert set(st["barriers"]) <= _round_ends(st)
 
 
 def test_batched_merged_symbol_disjointness(spark):
@@ -314,15 +348,11 @@ def test_batched_merged_symbol_disjointness(spark):
     count stale at application time. Verified structurally over the
     fixture and sf-corpus runs: within every round, no pair shares a
     literal symbol with another pick's pair OR merged output."""
-    from clickhouse_realtime_analytics_demo_spark.operators.bpe import (
-        train_bpe_batched,
-    )
-
     docs = spark.createDataFrame(
         [(i, t) for i, t in enumerate(FIXTURE)], "doc_id bigint, text string"
     )
     st: dict = {}
-    merges = train_bpe_batched(docs, 16, batch_size=8, stats=st)
+    merges = train_bpe(docs, 16, batch_size=8, stats=st)
     i = 0
     for picks in st["picks_per_round"]:
         batch = merges[i : i + picks]
@@ -341,17 +371,13 @@ def test_batched_relaxed_matches_reference(spark):
     (disjoint picks cap out at ~O(|alphabet|)/round early in training).
     Pinned against the same-rule pure-Python twin, and the round count
     must actually collapse to ~num_merges/batch_size."""
-    from clickhouse_realtime_analytics_demo_spark.operators.bpe import (
-        train_bpe_batched,
-    )
-
     docs = spark.createDataFrame(
         [(i, t) for i, t in enumerate(FIXTURE)], "doc_id bigint, text string"
     )
     wc = reference_word_counts(FIXTURE)
     for bs in (4, 8):
         st: dict = {}
-        got = train_bpe_batched(docs, 16, batch_size=bs, exact_counts=False, stats=st)
+        got = train_bpe(docs, 16, batch_size=bs, exact_counts=False, stats=st)
         want = reference_train_bpe_batched(wc, 16, bs, exact_counts=False)
         assert got == want, bs
         # every round fills its batch (until merges run out / pool dries)
@@ -361,17 +387,13 @@ def test_batched_relaxed_matches_reference(spark):
 def test_batched_relaxed_matches_reference_sf0001(spark):
     import pyarrow.parquet as pq
 
-    from clickhouse_realtime_analytics_demo_spark.operators.bpe import (
-        train_bpe_batched,
-    )
-
     texts = [
         t for t in pq.read_table("/root/testdata/sf0.001/documents.parquet")
         .column("text").to_pylist() if t is not None
     ]
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     st: dict = {}
-    got = train_bpe_batched(docs, 32, batch_size=8, exact_counts=False, stats=st)
+    got = train_bpe(docs, 32, batch_size=8, exact_counts=False, stats=st)
     want = reference_train_bpe_batched(
         reference_word_counts(texts), 32, 8, exact_counts=False
     )
@@ -382,47 +404,9 @@ def test_batched_relaxed_matches_reference_sf0001(spark):
 # ------------------------------------------- rank-priority encoder (r10)
 
 
-def test_rank_encoder_matches_fold_replay_fixture(spark):
-    from clickhouse_realtime_analytics_demo_spark.operators.bpe import (
-        segment_words_rank,
-    )
-
-    docs = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(FIXTURE)], "doc_id bigint, text string"
-    )
-    merges = train_bpe(docs, 12)
-    vocab = ["lowest", "newest", "widest", "low", "new", "unseen", "aaaa", "aa"]
-    words = spark.createDataFrame([(w,) for w in vocab], "word string")
-    fold = {r["word"]: r["bpe"] for r in segment_words(words, merges).collect()}
-    rank = {r["word"]: r["bpe"] for r in segment_words_rank(words, merges).collect()}
-    assert fold == rank
-    for w in vocab:
-        assert rank[w] == reference_segment(w, merges), w
-
-
-def test_rank_encoder_matches_fold_replay_corpus(spark):
-    # trained table over the sf0.001 corpus, encoded over its own word
-    # vocabulary: the two encoders must agree bit-for-bit on every word
-    from clickhouse_realtime_analytics_demo_spark.operators.bpe import (
-        segment_words_rank,
-        word_counts,
-    )
-
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    merges = train_bpe(docs, 24)
-    words = word_counts(docs).select("word")
-    fold = {r["word"]: r["bpe"] for r in segment_words(words, merges).collect()}
-    rank = {r["word"]: r["bpe"] for r in segment_words_rank(words, merges).collect()}
-    assert fold == rank and len(fold) > 0
-
-
 def test_rank_encoder_greedy_overlap_corner(spark):
     # (a,a) on "aaaa": left-to-right non-overlap -> [aa, aa], and with
     # (aa,aa) ranked next the rank loop continues to [aaaa]
-    from clickhouse_realtime_analytics_demo_spark.operators.bpe import (
-        segment_words_rank,
-    )
-
     words = spark.createDataFrame([("aaaa",), ("aaa",)], "word string")
     one = [(0, "a", "a", "aa", 0)]
     got = {r["word"]: r["bpe"] for r in segment_words_rank(words, one).collect()}
@@ -434,11 +418,6 @@ def test_rank_encoder_greedy_overlap_corner(spark):
 
 
 def test_rank_encoder_partition_invariant(spark):
-    from clickhouse_realtime_analytics_demo_spark.operators.bpe import (
-        segment_words_rank,
-        word_counts,
-    )
-
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     merges = train_bpe(docs, 12)
     words = word_counts(docs).select("word")
@@ -453,12 +432,27 @@ def test_rank_encoder_partition_invariant(spark):
     assert a == b
 
 
-def test_segment_rank_query_equals_fold_query(spark):
-    # the registered rows-only query pair must agree exactly
-    from clickhouse_realtime_analytics_demo_spark.queries import all_queries
+def test_segment_query_matches_reference(spark):
+    # the registered encode query's segmentation stats, recomputed in
+    # pure Python from the sequential reference trainer and the
+    # training-order replay encoder
+    import pyarrow.parquet as pq
 
-    qs = all_queries()
+    from clickhouse_realtime_analytics_demo_spark.queries import all_queries
+    from clickhouse_realtime_analytics_demo_spark.queries.llmops import _BPE_MERGES
+
     sf = "/root/testdata/sf0.001"
-    fold = [tuple(r) for r in qs["doc_bpe_segment"].fn(spark, sf).collect()]
-    rank = [tuple(r) for r in qs["doc_bpe_segment_rank"].fn(spark, sf).collect()]
-    assert fold == rank and len(fold) > 0
+    texts = [
+        t for t in pq.read_table(f"{sf}/documents.parquet")
+        .column("text").to_pylist() if t is not None
+    ]
+    wc = reference_word_counts(texts)
+    merges = reference_train_bpe(wc, _BPE_MERGES)
+    stats: dict[int, list[int]] = {}
+    for w, c in wc.items():
+        agg = stats.setdefault(len(reference_segment(w, merges)), [0, 0])
+        agg[0] += 1
+        agg[1] += c
+    want = [(n, words, occ) for n, (words, occ) in sorted(stats.items())]
+    got = [tuple(r) for r in all_queries()["doc_bpe_segment"].fn(spark, sf).collect()]
+    assert got == want and len(got) > 0
